@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Per-group sufficient statistics for a linear mixed model: everything
@@ -46,11 +46,14 @@ case class LmmFit(beta: Array[Double], psi: Array[Array[Double]],
   * (N−p)-style degrees-of-freedom correction that plain ML lacks.
   *
   * Scale: the observation-level data is touched exactly once
-  * ([[groupStats]], a single shuffle keyed by group). Every EM
-  * iteration runs two aggregate passes over the GROUP-cardinality
-  * stats frame (distributed map + p²-sized reduce); the driver holds
-  * β, Ψ, σ², C_β — p²+q²+1 scalars, never group-cardinality data. At
-  * 100 TB the stats frame is #locations rows, not #observations.
+  * ([[groupStats]], a single shuffle keyed by group), and [[local]]
+  * brings its group-cardinality result to the driver in one collect.
+  * Everything after that — the EM iterations and the BLUPs — is plain
+  * Scala over that array, summed in group-key order, so the fit does
+  * not depend on how the stats were partitioned. Driver footprint: per
+  * group (2 + p + p²) doubles plus the key — 22 doubles at p = 4, about
+  * 50 KB for the reference's ~265 locations. At 100 TB the array is
+  * #locations rows, not #observations.
   */
 object MixedLm {
 
@@ -88,16 +91,21 @@ object MixedLm {
       }
   }
 
+  /** The stats on the driver in one collect, sorted by group key: the
+    * order every cross-group sum of [[fitEm]] and [[blups]] runs in.
+    */
+  def local(stats: Dataset[LmmGroupStats]): Array[LmmGroupStats] =
+    stats.collect().sortBy(_.g)
+
   /** EM(-REML) fit. `ridgeEps` (scaled by the largest Gram diagonal)
     * keeps the GLS solve defined when a covariate is constant in the
     * window — e.g. the simulator's TAVG column when the weather feed
-    * is absent, or gov_action on an all-post-threshold slice.
+    * is absent, or gov_action on an all-post-threshold slice. Sums run
+    * over `stats` in array order; pass [[local]]'s key-sorted array.
     */
-  def fitEm(stats: Dataset[LmmGroupStats], p: Int, zIdx: Seq[Int],
+  def fitEm(stats: Array[LmmGroupStats], p: Int, zIdx: Seq[Int],
       reml: Boolean = true, maxIters: Int = 200, tol: Double = 1e-9,
       ridgeEps: Double = 1e-8): LmmFit = {
-    val spark = stats.sparkSession
-    import spark.implicits._
     val q = zIdx.length
     val zi = zIdx.toArray
     val totals = stats.map(s => Array(s.n, 1.0)).reduce(addVec _)
@@ -121,11 +129,9 @@ object MixedLm {
     var done = false
     while (it < maxIters && !done) {
       val psiInv = invSmall(psi)
-      val (s2c, psiC) = (sigma2, psiInv) // stable closures
-      val betaC = beta
       // ---- pass A: assemble the p×p GLS system Σ X'V⁻¹X, Σ X'V⁻¹y ----
       val pa = stats.map { s =>
-        val lam = lambdaOf(s, zi, s2c, psiC)
+        val lam = lambdaOf(s, zi, sigma2, psiInv)
         val szx = subRows(s.sxx, zi, p)          // q×p
         val szy = Array.tabulate(q)(i => s.sxy(zi(i)))
         val lz = matMul(lam, szx, q, q, p)       // q×p: Λ Szx
@@ -137,33 +143,32 @@ object MixedLm {
             var corr = 0.0
             var k = 0
             while (k < q) { corr += szx(k * p + i) * lz(k * p + j); k += 1 }
-            out(i * p + j) = (s.sxx(i * p + j) - corr / s2c) / s2c
+            out(i * p + j) = (s.sxx(i * p + j) - corr / sigma2) / sigma2
             j += 1
           }
           var corrY = 0.0
           var k = 0
           while (k < q) { corrY += lz(k * p + i) * szy(k); k += 1 }
-          out(p * p + i) = (s.sxy(i) - corrY / s2c) / s2c
+          out(p * p + i) = (s.sxy(i) - corrY / sigma2) / sigma2
           i += 1
         }
         out
       }.reduce(addVec _)
       val aMat = Array.tabulate(p, p)((i, j) =>
-        pa(i * p + j) + (if (i == j) eps / s2c else 0.0))
+        pa(i * p + j) + (if (i == j) eps / sigma2 else 0.0))
       val bVec = pa.slice(p * p, p * p + p)
       val betaN = LinAlg.solve(aMat, bVec)
       cBeta = invSmall(aMat)
-      val cbNow = cBeta
       // ---- pass B: Ψ and σ² M-steps (REML adds the C_β traces) ----
       val pb = stats.map { s =>
-        val lam = lambdaOf(s, zi, s2c, psiC)
+        val lam = lambdaOf(s, zi, sigma2, psiInv)
         val szz = subSquare(s.sxx, zi, p)        // q×q
         val szx = subRows(s.sxx, zi, p)
         val szy = Array.tabulate(q)(i => s.sxy(zi(i)))
         val rz = Array.tabulate(q)(i =>          // Z'(y − Xβ)
           szy(i) - (0 until p).map(j => szx(i * p + j) * betaN(j)).sum)
         val bh = Array.tabulate(q)(i =>          // BLUP b̂ = Λ rz / σ²
-          (0 until q).map(k => lam(i * q + k) * rz(k)).sum / s2c)
+          (0 until q).map(k => lam(i * q + k) * rz(k)).sum / sigma2)
         val ebb = Array.tabulate(q * q) { k =>
           val (i, j) = (k / q, k % q); bh(i) * bh(j) + lam(k)
         }
@@ -180,10 +185,10 @@ object MixedLm {
         if (reml) {
           // D = −Λ Szx / σ² (q×p); E[bb'] += D C_β D';
           // rss += tr(C_β (X+ZD)'(X+ZD))
-          val d = matMul(lam, szx, q, q, p).map(-_ / s2c)
+          val d = matMul(lam, szx, q, q, p).map(-_ / sigma2)
           val dcb = Array.tabulate(q * p) { kk =>
             val (i, j) = (kk / p, kk % p)
-            (0 until p).map(l => d(i * p + l) * cbNow(l)(j)).sum
+            (0 until p).map(l => d(i * p + l) * cBeta(l)(j)).sum
           }
           var i = 0
           while (i < q) {
@@ -211,7 +216,7 @@ object MixedLm {
                   d(kk * p + ii) * szzd(kk * p + jj)
                 kk += 1
               }
-              extra += cbNow(jj)(ii) * gij
+              extra += cBeta(jj)(ii) * gij
               jj += 1
             }
             ii += 1
@@ -225,8 +230,8 @@ object MixedLm {
       val psiN = Array.tabulate(q, q)((i, j) =>
         (pb(i * q + j) + pb(j * q + i)) / (2.0 * m)) // symmetrize fp drift
       val sigma2N = math.max(1e-12, pb(q * q) / bigN)
-      val delta = (0 until p).map(i => math.abs(betaN(i) - betaC(i))).max
-        .max(math.abs(sigma2N - s2c) / (1.0 + s2c))
+      val delta = (0 until p).map(i => math.abs(betaN(i) - beta(i))).max
+        .max(math.abs(sigma2N - sigma2) / (1.0 + sigma2))
       beta = betaN; psi = psiN; sigma2 = sigma2N
       it += 1
       if (delta < tol) done = true
@@ -234,30 +239,26 @@ object MixedLm {
     LmmFit(beta, psi, sigma2, cBeta, it)
   }
 
-  /** Per-group BLUPs at the converged fit: (g, b̂_1..b̂_q). */
-  def blups(stats: Dataset[LmmGroupStats], fit: LmmFit, p: Int,
-      zIdx: Seq[Int]): DataFrame = {
-    val spark = stats.sparkSession
-    import spark.implicits._
+  /** Per-group BLUPs at the converged fit: (g, b̂_1..b̂_q), in the
+    * order of `stats`. */
+  def blups(stats: Array[LmmGroupStats], fit: LmmFit, p: Int,
+      zIdx: Seq[Int]): Array[(String, Array[Double])] = {
     val q = zIdx.length
     val zi = zIdx.toArray
     val psiInv = invSmall(fit.psi)
-    val (s2, betaF) = (fit.sigma2, fit.beta)
-    val ds = stats.map { s =>
-      val lam = lambdaOf(s, zi, s2, psiInv)
+    stats.map { s =>
+      val lam = lambdaOf(s, zi, fit.sigma2, psiInv)
       val szx = subRows(s.sxx, zi, p)
       val szy = Array.tabulate(q)(i => s.sxy(zi(i)))
       val rz = Array.tabulate(q)(i =>
-        szy(i) - (0 until p).map(j => szx(i * p + j) * betaF(j)).sum)
+        szy(i) - (0 until p).map(j => szx(i * p + j) * fit.beta(j)).sum)
       val bh = Array.tabulate(q)(i =>
-        (0 until q).map(k => lam(i * q + k) * rz(k)).sum / s2)
+        (0 until q).map(k => lam(i * q + k) * rz(k)).sum / fit.sigma2)
       (s.g, bh)
     }
-    ds.select(col("_1").as("g") +:
-      (0 until q).map(i => col("_2").getItem(i).as(s"b$i")): _*)
   }
 
-  // ---- small dense helpers (executor-side, q ≤ 2, p ≤ 4) ----
+  // ---- small dense helpers (q ≤ 2, p ≤ 4) ----
 
   private def addVec(a: Array[Double], b: Array[Double]): Array[Double] = {
     val out = new Array[Double](a.length)

@@ -4,6 +4,8 @@ import graft.ops.MixedLm
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Per-state simulation row (top-level for Encoders). */
 case class SimRow(state: String, rn: Int, confirmed: Double, removed: Double,
@@ -160,34 +162,41 @@ object CovidSimulator {
       .select((col("state") +: col("d_removed").cast("double").as("y") +:
         xs.map(c => col(c).cast("double").as(c))): _*)
       .na.drop()
-    // ONE observation-level pass → group stats; EM iterates over the
-    // state-cardinality frame only (driver holds β, Ψ, σ² — p²+q²
-    // scalars, never per-state data)
-    val stats = MixedLm.groupStats(train, "state", "y", xs).persist()
+    // ONE observation-level pass → group stats, collected once: the EM
+    // fit, the BLUPs and the imputation run on the driver over the
+    // state-cardinality array (MixedLm's header states its footprint)
+    val stats = MixedLm.local(MixedLm.groupStats(train, "state", "y", xs))
     val fit = MixedLm.fitEm(stats, p = 4, zIdx = Seq(0, 3))
     val beta = fit.beta
-    val rc = MixedLm.blups(stats, fit, p = 4, zIdx = Seq(0, 3))
-      .select(col("g").as("state"), lit("Intercept").as("coef_name"),
-        col("b0").as("coef_value"), col("b1").as("re_lag_confirmed"))
-      .withColumn("fe_Intercept", lit(beta(0)))
-      .withColumn("Intercept", col("fe_Intercept") + col("coef_value"))
-      .withColumn("lag_confirmed", lit(beta(3)) + col("re_lag_confirmed"))
-      .withColumn("gov_action", lit(beta(1)))
-      .withColumn("TAVG", lit(beta(2)))
-    // negative-beta mean imputation (covid_simulator.py:501-502)
-    val out =
-      if (!imputeNegative) rc
-      else {
-        val mb = rc.filter(col("lag_confirmed") > 0)
-          .agg(avg("lag_confirmed").as("mean_beta"))
-        rc.crossJoin(broadcast(mb))
-          .withColumn("lag_confirmed",
-            when(col("lag_confirmed") < 0, col("mean_beta"))
-              .otherwise(col("lag_confirmed")))
-      }
-    out.select("state", "coef_name", "coef_value", "re_lag_confirmed",
-      "fe_Intercept", "Intercept", "lag_confirmed", "gov_action", "TAVG")
+    val rc = MixedLm.blups(stats, fit, p = 4, zIdx = Seq(0, 3)).map {
+      case (state, b) => (state, b(0), b(1), beta(3) + b(1))
+    }
+    // negative-beta mean imputation (covid_simulator.py:501-502); like
+    // SQL avg, no positive β leaves a null mean
+    val pos = rc.map(_._4).filter(_ > 0)
+    val meanBeta: java.lang.Double =
+      if (pos.isEmpty) null else pos.sum / pos.length
+    val rows = rc.toSeq.map { case (state, b0, b1, lagC) =>
+      val lag: java.lang.Double =
+        if (imputeNegative && lagC < 0) meanBeta else lagC
+      Row(state, "Intercept", b0, b1, beta(0), beta(0) + b0, lag, beta(1),
+        beta(2))
+    }
+    feats.sparkSession.createDataFrame(rows.asJava, coefSchema)
   }
+
+  /** The coefficient table's columns, with the nullability the SQL
+    * spelling of [[coefficients]] gave them. */
+  private val coefSchema = StructType(Seq(
+    StructField("state", StringType),
+    StructField("coef_name", StringType, nullable = false),
+    StructField("coef_value", DoubleType),
+    StructField("re_lag_confirmed", DoubleType),
+    StructField("fe_Intercept", DoubleType, nullable = false),
+    StructField("Intercept", DoubleType),
+    StructField("lag_confirmed", DoubleType),
+    StructField("gov_action", DoubleType, nullable = false),
+    StructField("TAVG", DoubleType, nullable = false)))
 
   /** Stages 10-11 of §3.3 (covid_simulator.py:599-627) — the causal
     * question: simulate twice, once as-is and once with gov_action
@@ -221,7 +230,8 @@ object CovidSimulator {
   /** Stages 7-8 of §3.3 — per-state discrete SIR on the training rows
     * with alpha = beta*R0/N (generate_dataset, covid_simulator.py:39-58)
     * and z1(t) = cI + cGov*gov_action(t) + cT*TAVG(t), then the bias
-    * adjustment on pred_removed and the final clamp at zero.
+    * adjustment on pred_removed and the final clamp at zero — all three
+    * inside one pass over each state's rows.
     */
   def simulate(feats: DataFrame, coefs: DataFrame): DataFrame = {
     val spark = feats.sparkSession
@@ -234,7 +244,7 @@ object CovidSimulator {
       .withColumn("rn", row_number().over(w))
       .withColumn("z1cov",
         col("cI") + col("cG") * col("gov_action") + col("cT") * col("TAVG"))
-    val sim = joined
+    joined
       .select(col("state"), col("rn"), col("confirmed"), col("removed"),
         col("population"), col("z1cov").as("z1"), col("R_0").as("r0"),
         col("beta"))
@@ -246,7 +256,7 @@ object CovidSimulator {
         val n = h.population
         val alpha = h.beta * h.r0 / n
         var pc = h.confirmed; var pr = h.removed; var ps = n
-        rows.iterator.map { r =>
+        val out = rows.map { r =>
           if (r.rn > 1) {
             val pcN = pc + alpha * ps * pc - h.beta * pc - r.z1
             val prN = pr + h.beta * pc + r.z1
@@ -255,18 +265,14 @@ object CovidSimulator {
           }
           SimOut(state, r.rn, pc, pr, ps)
         }
+        // M8 bias: the state's mean of pred_removed − removed; subtract
+        // its magnitude from pred_removed, then clamp at 0
+        val bias = out.lazyZip(rows)
+          .map((o, r) => o.pred_removed - r.removed).sum / rows.length
+        out.iterator.map(o => o.copy(
+          pred_removed = math.max(0.0, o.pred_removed - math.abs(bias))))
       }
       .toDF()
-    // M8 bias adjust on pred_removed vs actual removed, then clamp
-    val actual = joined.select(col("state"), col("rn"), col("removed"))
-    val bias = sim.join(actual, Seq("state", "rn"))
-      .groupBy("state")
-      .agg(avg(col("pred_removed") - col("removed")).as("bias"))
-    sim.join(broadcast(bias), Seq("state"))
-      .withColumn("pred_removed",
-        greatest(lit(0.0), col("pred_removed") - abs(col("bias"))))
-      .select("state", "rn", "pred_confirmed", "pred_removed",
-        "pred_susceptible")
   }
 
   /** Runnable: transform → features → coefficients → simulation. */

@@ -1,6 +1,10 @@
 package graft
 
 import graft.ops.MixedLm
+import graft.pipelines.CovidSimulator
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -46,7 +50,7 @@ class MixedLmSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private lazy val stats =
-    MixedLm.groupStats(df, "g", "y", Seq("intercept")).persist()
+    MixedLm.local(MixedLm.groupStats(df, "g", "y", Seq("intercept")))
 
   // closed forms, straight-line Scala
   private lazy val (msw, msb, grand) = {
@@ -95,7 +99,8 @@ class MixedLmSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = for (i <- 0 until m; j <- 0 until n)
       yield (s"g$i", yij(i, j), 1.0, 0.0)
     val df2 = rows.toDF("g", "y", "intercept", "dead")
-    val st2 = MixedLm.groupStats(df2, "g", "y", Seq("intercept", "dead"))
+    val st2 = MixedLm.local(
+      MixedLm.groupStats(df2, "g", "y", Seq("intercept", "dead")))
     val fit2 = MixedLm.fitEm(st2, p = 2, zIdx = Seq(0), maxIters = 2000,
       tol = 1e-13)
     val fit1 = MixedLm.fitEm(stats, p = 1, zIdx = Seq(0), maxIters = 2000,
@@ -108,9 +113,8 @@ class MixedLmSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("BLUPs shrink group means toward the grand mean") {
     val fit = MixedLm.fitEm(stats, p = 1, zIdx = Seq(0))
-    import spark.implicits._
     val b = MixedLm.blups(stats, fit, p = 1, zIdx = Seq(0))
-      .select("g", "b0").as[(String, Double)].collect().toMap
+      .map { case (g, bh) => g -> bh(0) }.toMap
     val ybars = (0 until m).map(i =>
       s"g$i" -> (0 until n).map(yij(i, _)).sum / n).toMap
     // shrinkage factor for balanced groups: w = n tau2/(sigma2 + n tau2)
@@ -120,5 +124,77 @@ class MixedLmSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(math.abs(b(g) - expected) < 1e-6 * (1 + math.abs(expected)),
         s"$g blup ${b(g)} vs $expected")
     }
+  }
+
+  // simulator-shaped design: random intercept and slope on x, a fixed
+  // covariate, deterministic noise. Persisted, so that every
+  // repartitioning below reads the same per-group sums.
+  private lazy val stats3 = {
+    import spark.implicits._
+    val rows = for (g <- 0 until 30; i <- 0 until 12) yield {
+      val x = 0.5 + (i % 6)
+      val y = (2.0 + 0.03 * (g % 7)) + (0.4 + 0.01 * (g % 5)) * x +
+        0.8 * math.sin(3.1 * g + 1.7 * i)
+      (s"g$g", y, 1.0, (i % 3).toDouble, x)
+    }
+    MixedLm.groupStats(rows.toDF("g", "y", "intercept", "cov", "x"), "g",
+      "y", Seq("intercept", "cov", "x")).persist()
+  }
+
+  private def bits(xs: Iterable[Double]): Seq[Long] =
+    xs.map(java.lang.Double.doubleToRawLongBits).toSeq
+
+  test("fit and BLUPs are bit-identical at 1 and 7 stats partitions") {
+    val Seq((f1, b1), (f7, b7)) = Seq(1, 7).map { k =>
+      val st = MixedLm.local(stats3.repartition(k))
+      val fit = MixedLm.fitEm(st, p = 3, zIdx = Seq(0, 2))
+      (fit, MixedLm.blups(st, fit, p = 3, zIdx = Seq(0, 2)))
+    }
+    assert(bits(f1.beta) == bits(f7.beta))
+    assert(bits(f1.psi.flatten) == bits(f7.psi.flatten))
+    assert(bits(Seq(f1.sigma2)) == bits(Seq(f7.sigma2)))
+    assert(f1.iters == f7.iters)
+    assert(b1.map(_._1).toSeq == b7.map(_._1).toSeq)
+    assert(bits(b1.flatMap(_._2)) == bits(b7.flatMap(_._2)))
+  }
+
+  /** `body`'s result and the Spark jobs it started. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      TestListenerBus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("fitEm starts no Spark job; coefficients only its one collect") {
+    val st = MixedLm.local(stats3)
+    for (iters <- Seq(0, 1, 500)) {
+      val (fit, n) = jobsOf(MixedLm.fitEm(st, p = 3, zIdx = Seq(0, 2),
+        maxIters = iters, tol = 0.0))
+      assert(fit.iters == iters)
+      assert(n == 0, s"fitEm(maxIters = $iters) started $n jobs")
+    }
+    import spark.implicits._
+    // the columns coefficients reads from the simulator's features
+    val feats = (for (g <- 0 until 12; t <- 0 until 20) yield {
+      val lag = 10.0 * t + g
+      (s"s$g", (0.05 + 0.002 * g) * lag + math.sin(1.3 * g + 0.7 * t),
+        lag + 1.0, 0, 1.0, if (t > 9) 1 else 0, 0.0, lag)
+    }).toDF("state", "d_removed", "removed", "holdout", "Intercept",
+      "gov_action", "TAVG", "lag_confirmed")
+    // the collect of groupStats' aggregate is two jobs under adaptive
+    // execution (on by default): the shuffle-map stage, then the result
+    val (coefs, n) = jobsOf(CovidSimulator.coefficients(feats))
+    assert(n == 2, s"coefficients started $n jobs")
+    assert(coefs.count() == 12)
   }
 }

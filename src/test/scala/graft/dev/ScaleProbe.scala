@@ -1540,12 +1540,13 @@ object ScaleProbe {
     spark.stop()
   }
 
-  /** REML-EM mixed-model scaling (round 9): the fit's design claim is
-    * that per-iteration cost rides the GROUP-cardinality stats frame,
-    * not the observation count — groups replicated m× (disjoint group
-    * keys, same per-group data) should cost ~flat per EM iteration
-    * after the single observation-level groupStats pass. Probes the
-    * simulator-shaped model (p=4, q=2) on synthetic groups.
+  /** REML-EM mixed-model scaling: the observation-level groupStats pass
+    * is the one distributed step; the fit collects the GROUP-cardinality
+    * stats once and iterates on the driver, so `collect+em40` (the
+    * collect plus 40 EM iterations) should grow ~linearly in the group
+    * count with groups replicated m× (disjoint group keys, same
+    * per-group data). Probes the simulator-shaped model (p=4, q=2) on
+    * synthetic groups.
     * usage: Test/runMain graft.dev.ScaleProbe mixedlm
     */
   private def mixedLmProbe(): Unit = {
@@ -1575,12 +1576,12 @@ object ScaleProbe {
       stats.count()
       val tStats = (System.nanoTime() - t0) / 1e9
       t0 = System.nanoTime()
-      val fit = MixedLm.fitEm(stats, p = 4, zIdx = Seq(0, 3),
+      val fit = MixedLm.fitEm(MixedLm.local(stats), p = 4, zIdx = Seq(0, 3),
         maxIters = 40, tol = 0.0) // fixed 40 iterations: comparable work
       val tFit = (System.nanoTime() - t0) / 1e9
       stats.unpersist()
       println(f"MIXEDLM x$m%-3d groups=$nG%-5d obs=${nG * 40}%-7d " +
-        f"stats=$tStats%5.2fs em40=$tFit%6.2fs " +
+        f"stats=$tStats%5.2fs collect+em40=$tFit%6.2fs " +
         f"(${tFit / 40 * 1000}%5.1f ms/iter) beta_x=${fit.beta(3)}%.4f")
     }
     spark.stop()
